@@ -44,3 +44,29 @@ def driver_tables(spark, sf_dir):
     from wrds_data_pipeline_spark.catalog import register_views
 
     return register_views(spark, sf_dir)
+
+
+@pytest.fixture
+def reliable_checkpoint_dir(spark, tmp_path):
+    """A SparkContext checkpoint dir under ``tmp_path``: every
+    ``caching.waist`` in the test takes the reliable path.  The
+    setting is context-global, so teardown restores "no dir" and the
+    rest of the session keeps local truncation."""
+    sc = spark.sparkContext
+    d = str(tmp_path / "ckpt")
+    sc.setCheckpointDir(d)
+    yield d
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+
+@pytest.fixture
+def identity_waist(monkeypatch):
+    """Turn every ``caching.waist`` into the identity, for plan audits:
+    truncation replaces the upstream with a Scan ExistingRDD in the
+    executed plan, hiding the very properties the audits assert (the
+    logical composition is the same either way)."""
+    from wrds_data_pipeline_spark import caching
+
+    monkeypatch.setattr(
+        caching, "waist", lambda df, scope=None, eager=False: df
+    )

@@ -10,13 +10,19 @@ Two contracts:
   cache already freed; the only pinned storage it may add is the
   localCheckpoint of its own (pairs-sized) result, which the
   ContextCleaner frees when the caller drops the DataFrame.
+
+Plus the lineage-waist contract: ``caching.waist`` is the package's
+only truncation call, and its local and reliable forms agree.
 """
 
 from __future__ import annotations
 
+import ast
+import os
+
 from pyspark.sql import functions as F
 
-from wrds_data_pipeline_spark.caching import PersistScope
+from wrds_data_pipeline_spark.caching import PersistScope, waist
 
 
 def _persistent_ids(spark) -> set[int]:
@@ -177,3 +183,91 @@ def test_jaccard_exact_path_default_frees(spark):
     assert len(added) <= 1, added
     rows = out.collect()
     assert {(r["id_a"], r["id_b"]) for r in rows} == {(0, 1)}
+
+
+def _waist_input(spark):
+    return (
+        spark.range(300)
+        .select((F.col("id") % 13).alias("k"), "id")
+        .groupBy("k")
+        .agg(
+            F.sum("id").alias("s"),
+            F.sort_array(F.collect_list("id")).alias("ids"),
+        )
+    )
+
+
+def _rdd_dirs(root) -> list[str]:
+    return [
+        d for _, dirs, _ in os.walk(root) for d in dirs
+        if d.startswith("rdd-")
+    ]
+
+
+def test_waist_local_and_reliable_rows_agree(spark, tmp_path, request):
+    """Bit-equal rows with and without a checkpoint dir; reliable
+    checkpoint files appear only when the session has a dir, and an
+    unscoped reliable waist leaves no persist behind."""
+    df = _waist_input(spark)
+    want = sorted(map(tuple, df.collect()))
+    local = [waist(df), waist(df, eager=True)]
+    assert [sorted(map(tuple, w.collect())) for w in local] == [want] * 2
+    assert _rdd_dirs(tmp_path) == []
+
+    ckpt = request.getfixturevalue("reliable_checkpoint_dir")
+    before = _persistent_ids(spark)
+    reliable = [waist(df), waist(df, eager=True)]
+    assert _persistent_ids(spark) - before == set()
+    assert [sorted(map(tuple, w.collect())) for w in reliable] == [want] * 2
+    assert len(_rdd_dirs(ckpt)) == 2
+    with PersistScope() as scope:
+        scoped = waist(df, scope)
+        assert sorted(map(tuple, scoped.collect())) == want
+    assert len(_rdd_dirs(ckpt)) == 3
+    assert _persistent_ids(spark) - before == set()
+
+
+def test_waist_scope_tracks_one_relation(spark):
+    df = _waist_input(spark)
+    before = _persistent_ids(spark)
+    with PersistScope() as scope:
+        out = waist(df, scope)
+        assert scope.tracked == 1
+        assert sorted(map(tuple, out.collect())) == sorted(
+            map(tuple, df.collect())
+        )
+    # only the truncated result's own local blocks outlive the scope
+    assert len(_persistent_ids(spark) - before) <= 1
+
+
+def test_waist_is_the_only_truncation_call():
+    """No ``localCheckpoint``/``checkpoint`` call and no zero-argument
+    ``.persist()`` in the package outside caching.py: every lineage cut
+    goes through ``caching.waist`` and every persist through a
+    ``PersistScope``, so the policy lives in one place."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "wrds_data_pipeline_spark",
+    )
+    found = []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or name == "caching.py":
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                ):
+                    continue
+                attr = node.func.attr
+                bare_persist = attr == "persist" and not (
+                    node.args or node.keywords
+                )
+                if attr in ("localCheckpoint", "checkpoint") or bare_persist:
+                    rel = os.path.relpath(path, pkg)
+                    found.append(f"{rel}:{node.lineno} .{attr}()")
+    assert found == [], found

@@ -69,58 +69,26 @@ def test_cc_empty(spark):
     assert connected_components(df).count() == 0
 
 
-def test_cc_reliable_checkpoint_dir(spark, tmp_path):
-    """checkpoint_dir= routes every per-round snapshot through
-    reliable checkpoint(): same result as the union-find oracle, and
-    the round snapshots actually land in the directory (the property
-    that survives executor loss on a cluster)."""
+def test_cc_reliable_checkpoint_dir(spark, reliable_checkpoint_dir):
+    """A session with a checkpoint dir routes every per-round snapshot
+    through reliable checkpoint(): same result as the union-find
+    oracle, and the round snapshots actually land in the directory
+    (the property that survives executor loss on a cluster)."""
     import os
 
-    ckpt = os.path.join(str(tmp_path), "cc_ckpt")
     edges = [(i, i + 1) for i in range(30)] + [(100, 101), (101, 102)]
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
     got = {
         (r["id"], r["group_id"])
-        for r in connected_components(df, checkpoint_dir=ckpt).collect()
+        for r in connected_components(df).collect()
     }
     assert got == set(_union_find_groups(edges).items())
     # reliable snapshots persisted to the shared dir, one per round
     rdd_dirs = [
-        d for root, dirs, _ in os.walk(ckpt) for d in dirs if d.startswith("rdd-")
+        d for _, dirs, _ in os.walk(reliable_checkpoint_dir) for d in dirs
+        if d.startswith("rdd-")
     ]
     assert len(rdd_dirs) >= 2
-
-
-def test_cc_checkpoint_dir_warning_semantics(spark, tmp_path):
-    """The 'checkpoint_dir ignored' warning must fire only on a REAL
-    conflict: getCheckpointDir returns '<scheme>:<dir>/<uuid>', so a
-    repeat call with the same dir must stay silent (the comparison
-    strips the scheme and the UUID leaf) while a different dir warns."""
-    import os
-    import re
-    import warnings
-
-    import pytest
-
-    sc = spark.sparkContext
-    df = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    # ensure a context-global dir exists (first call sets it if unset)
-    connected_components(
-        df, checkpoint_dir=os.path.join(str(tmp_path), "cc_a")
-    ).collect()
-    configured = sc.getCheckpointDir()
-    same = (
-        re.sub(r"^[a-zA-Z][a-zA-Z0-9+.-]*:(//)?", "", configured)
-        .rstrip("/")
-        .rsplit("/", 1)[0]
-    )
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # any warning -> test failure
-        connected_components(df, checkpoint_dir=same).collect()
-    with pytest.warns(UserWarning, match="ignored"):
-        connected_components(
-            df, checkpoint_dir=os.path.join(str(tmp_path), "cc_other")
-        ).collect()
 
 
 def test_dedup_keep_canonical_transitive(spark):

@@ -28,17 +28,11 @@ def test_contamination_benchmark_side_is_broadcast(spark, driver_tables):
     assert "SortMergeJoin" not in plan
 
 
-def test_packing_has_no_global_window(spark):
+def test_packing_has_no_global_window(spark, identity_waist):
     docs = spark.createDataFrame(
         [(i, 100 + i % 50) for i in range(500)], ["doc_id", "n_tok"]
     )
-    # truncate_lineage=False: the audit needs the full composed plan
-    # (truncation replaces everything above the chunk-assignment
-    # waist with a Scan ExistingRDD in explain)
-    packed = pack_sequences(
-        docs, 2048, token_col="n_tok", chunk_bins=8,
-        truncate_lineage=False,
-    )
+    packed = pack_sequences(docs, 2048, token_col="n_tok", chunk_bins=8)
     plan = _plan(packed)
     # every Window over data rows is partitioned by _pid; the only
     # allowed unpartitioned window is the per-partition-offsets one,
@@ -54,14 +48,11 @@ def test_packing_has_no_global_window(spark):
         assert "_ptot" in w or "_off" in w, w
 
 
-def test_packing_prefix_sum_range_partitions(spark):
+def test_packing_prefix_sum_range_partitions(spark, identity_waist):
     docs = spark.createDataFrame(
         [(i, 100) for i in range(500)], ["doc_id", "n_tok"]
     )
-    packed = pack_sequences(
-        docs, 2048, token_col="n_tok", chunk_bins=8,
-        truncate_lineage=False,
-    )
+    packed = pack_sequences(docs, 2048, token_col="n_tok", chunk_bins=8)
     plan = _plan(packed)
     assert "rangepartitioning" in plan.lower()
 

@@ -263,7 +263,7 @@ def test_registered_q67_matches_its_oracle(spark, sf_dir):
     assert got == exp and len(got) >= 400  # ~1 per doc at sf0.01
 
 
-def test_near_dup_plan_is_equi_join_no_cross(spark, sf_dir):
+def test_near_dup_plan_is_equi_join_no_cross(spark, sf_dir, identity_waist):
     """The banded join must plan as a keyed join (SMJ/SHJ/BHJ on
     (band, band_val)), never a cartesian/BNLJ — the no-all-pairs
     audit for the unregistered groups path (q67's registered plan is
@@ -274,7 +274,6 @@ def test_near_dup_plan_is_equi_join_no_cross(spark, sf_dir):
     pairs = hamming_near_dup_pairs(
         extract_dhash(synthesize_media(spark, docs)),
         max_hamming=3, bands=4,
-        truncate_lineage=False,  # keep the upstream visible to audit
     )
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan

@@ -259,25 +259,27 @@ def test_unique_keys_do_not_raise_and_check_skippable(spark):
     assert [r["_cum"] for r in cum] == [0, 10]
 
 
-def test_reliable_checkpoint_waist(spark, tmp_path):
+def test_reliable_checkpoint_waist(spark, request):
     """On preemptible clusters localCheckpoint's unreplicated blocks
-    make the truncated lineage unrecomputable on executor loss;
-    reliable_checkpoint=True writes the waist to the fault-tolerant
-    checkpoint dir instead — identical packing either way."""
+    make the truncated lineage unrecomputable on executor loss; a
+    session with a checkpoint dir writes the waist to that
+    fault-tolerant dir instead — identical packing either way."""
+    import os
+
     rng = random.Random(7)
     toks = [rng.randrange(1, 900) for _ in range(120)]
     docs = _tok_docs(spark, toks)
-    sc = spark.sparkContext
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    default = _collect(
+    local = _collect(
         pack_sequences(docs, max_tokens=1024, token_col="n_tok")
     )
+    ckpt = request.getfixturevalue("reliable_checkpoint_dir")
     reliable = _collect(
-        pack_sequences(
-            docs, max_tokens=1024, token_col="n_tok",
-            reliable_checkpoint=True,
-        )
+        pack_sequences(docs, max_tokens=1024, token_col="n_tok")
     )
-    assert [(r.doc_id, r.seq_id, r.seq_pos) for r in default] == [
+    assert [(r.doc_id, r.seq_id, r.seq_pos) for r in local] == [
         (r.doc_id, r.seq_id, r.seq_pos) for r in reliable
+    ]
+    assert [
+        d for _, dirs, _ in os.walk(ckpt) for d in dirs
+        if d.startswith("rdd-")
     ]

@@ -115,7 +115,7 @@ def test_hamming_near_dup_pairs_scope_parity(spark):
         scope.release()
 
 
-def test_probe_band_index_prerelesolved_rel_parity(spark, tmp_path):
+def test_probe_band_index_preresolved_rel_parity(spark, tmp_path):
     from wrds_data_pipeline_spark.operators.dedup import (
         build_band_index,
         probe_band_index,

@@ -502,10 +502,10 @@ def corpus_gates_rung(spark, sizes: list[int]) -> None:
         docs, acc = _row_ticker(spark, docs0)
         t0 = time.time()
         kept, audit = curate(docs)
-        gated, scored = apply_corpus_gates(spark, kept, keep_frac=0.5)
+        gated, gate_cache = apply_corpus_gates(spark, kept, keep_frac=0.5)
         n_out = gated.count()
-        if scored is not None:
-            scored.unpersist()
+        if gate_cache is not None:
+            gate_cache.release()
         n_audit = audit.groupBy("fate").count().count()
         wall = time.time() - t0
         passes = acc.value / n_docs

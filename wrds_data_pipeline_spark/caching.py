@@ -1,14 +1,14 @@
-"""Lifecycle management for persisted intermediate relations.
+"""Persisted intermediates and lineage waists.
 
-Several operators (``near_dup_pairs``, ``minhash_lsh_candidates``,
-``jaccard_pairs``, ``curate``) persist an intermediate relation that
-their plan reads more than once — the shingle table, the LSH band
-table — because an un-persisted second read replays the expensive
-tokenize+md5 subtree.  A bare ``df.persist()`` with no matching
-``unpersist`` leaks executor cache in a long-lived session: each
-invocation pins another copy until LRU eviction.
+Two idioms, each written once here:
 
-``PersistScope`` closes the leak with two usage modes:
+**Persist with one release path.**  Several operators
+(``near_dup_pairs``, ``minhash_lsh_candidates``, ``jaccard_pairs``,
+``curate``) read an intermediate relation more than once — the
+shingle table, the LSH band table — and an un-persisted second read
+replays the expensive tokenize+md5 subtree.  A bare ``df.persist()``
+with no matching ``unpersist`` leaks executor cache in a long-lived
+session, so every persist goes through a ``PersistScope``:
 
 - **Caller-owned** (a service/session that calls operators many
   times): pass a scope in; the operator registers every persisted
@@ -23,16 +23,24 @@ invocation pins another copy until LRU eviction.
 
 - **Self-managed default** (``scope=None``): the operator persists
   into a private scope, eagerly materializes its (small,
-  pairs-sized) result via ``localCheckpoint`` and releases the
+  pairs-sized) result via ``materialize_release`` and releases the
   intermediates before returning.  After the call the only pinned
   storage is the result itself, which the ContextCleaner frees when
-  the caller drops the DataFrame.  The cost of the default is
-  eagerness (the job runs at call time, like any materialize) —
-  callers composing larger lazy pipelines pass a scope instead.
+  the caller drops the DataFrame.
 
-At cluster scale the same role is played by materializing the
-intermediate to a table (parquet, bucketed); ``PersistScope`` is the
-in-session equivalent.
+**Cut lineage at a waist.**  Deep composed plans (universe, dup-group
+and corpus pipelines) stay tractable only because a relation read
+more than once is truncated: Catalyst otherwise re-expands its full
+upstream per reference at analysis time and re-derives it per action.
+``waist(df, scope, eager)`` is the package's only truncation call.
+With a scope it persists ``df`` under it first (a repeated invocation
+re-reads the cache and the truncation re-materializes from it).  The
+truncation kind is the session's, not the caller's: a SparkContext
+with a checkpoint dir (``sc.setCheckpointDir`` or
+``spark.checkpoint.dir`` — HDFS/S3 on a preemptible cluster) gets
+reliable ``checkpoint()``, whose files survive executor loss;
+otherwise ``localCheckpoint``, whose unreplicated executor blocks are
+fine for local mode and stable clusters.
 """
 
 from __future__ import annotations
@@ -92,19 +100,36 @@ class PersistScope:
         self.release()
 
 
-def materialize_release(df: DataFrame, scope: PersistScope) -> DataFrame:
-    """The self-managed ending: eagerly materialize ``df`` with
-    ``localCheckpoint`` (truncates lineage, so the result no longer
-    depends on the scope's caches), then release the scope.  Skips the
-    checkpoint when the scope tracked nothing (the plan never read a
-    cache, so laziness costs nothing).
+def waist(
+    df: DataFrame, scope: PersistScope | None = None, eager: bool = False
+) -> DataFrame:
+    """``df`` with its lineage truncated (see the module docstring for
+    the local-vs-reliable policy).  ``scope`` persists ``df`` under
+    the caller's scope first; ``eager`` materializes at call time.
 
-    ``localCheckpoint`` stores the result on the executors (lost on
-    executor failure — acceptable for an interactive/default path;
-    jobs needing fault-tolerant lineage should pass a caller-owned
-    scope and keep the plan lazy)."""
+    A reliable waist persists before checkpointing, because the
+    checkpoint write otherwise recomputes the lineage.  Without a
+    scope nothing could release that persist after a lazy action, so
+    an unscoped reliable waist is always eager and drops its persist
+    before returning."""
+    reliable = df.sparkSession.sparkContext.getCheckpointDir() is not None
+    if scope is not None:
+        df = scope.persist(df)
+    elif reliable:
+        with PersistScope() as own:
+            return own.persist(df).checkpoint(eager=True)
+    if reliable:
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
+
+
+def materialize_release(df: DataFrame, scope: PersistScope) -> DataFrame:
+    """The self-managed ending: eagerly materialize ``df`` at a waist
+    (so the result no longer depends on the scope's caches), then
+    release the scope.  Skips the waist when the scope tracked nothing
+    (the plan never read a cache, so laziness costs nothing)."""
     if scope.tracked == 0:
         return df
-    out = df.localCheckpoint(eager=True)
+    out = waist(df, eager=True)
     scope.release()
     return out

@@ -42,11 +42,6 @@ WRDS_TABLES = (
 )
 
 
-def load_table(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan for one table; Catalyst prunes columns/rows."""
-    return spark.read.parquet(os.path.join(data_dir, f"{name}.parquet"))
-
-
 def load_tables(
     spark: SparkSession, data_dir: str, names: tuple[str, ...] = DRIVER_TABLES
 ) -> dict[str, DataFrame]:

@@ -26,6 +26,7 @@ import datetime
 import re
 import sys
 
+from wrds_data_pipeline_spark import caching
 from wrds_data_pipeline_spark.catalog import load_tables
 from wrds_data_pipeline_spark.session import get_spark
 
@@ -219,6 +220,7 @@ def apply_corpus_gates(
     keep_frac: float | None = None,
     model_min_prob: float = 0.5,
     perplexity_keep_frac: float = 0.9,
+    scope: caching.PersistScope | None = None,
 ):
     """The fused per-doc gate stage (round 7, VERDICT r6 next #3): the
     three post-curation gates (model probability, reference
@@ -235,7 +237,11 @@ def apply_corpus_gates(
     population surviving the PREVIOUS gates, exactly as the
     sequential chain did (parity-tested in tests/test_cli.py;
     pass-counted load-independently in
-    tools/scale_rehearsal.py --corpus-gates)."""
+    tools/scale_rehearsal.py --corpus-gates).
+
+    Returns ``(gated, scope)``: ``scope`` owns the persisted scored
+    relation (``scope`` when given, else a fresh ``PersistScope``) —
+    release it once ``gated`` is consumed; None when no gate is on."""
     from pyspark.sql import functions as F
 
     # validate here, not only at the CLI: this is a public importable
@@ -276,8 +282,9 @@ def apply_corpus_gates(
         scored = scored.withColumn(
             "_q", F.round(X.quality_score("text"), 6)
         )
-    scored = scored.persist()
-    sel = scored
+    if scope is None:
+        scope = caching.PersistScope()
+    sel = scope.persist(scored)
     if quality_model:
         sel = sel.filter(F.col("_prob") >= F.lit(model_min_prob))
     if lm_ref:
@@ -295,7 +302,7 @@ def apply_corpus_gates(
             )
         ).first()[0]
         sel = sel.filter(F.col("_q") >= F.lit(q_cut))
-    return sel.drop("_prob", "_ce", "_q"), scored
+    return sel.drop("_prob", "_ce", "_q"), scope
 
 
 def _read_docs(spark, path: str):
@@ -534,70 +541,72 @@ def corpus_main(argv: list[str] | None = None) -> int:
         )
     except ValueError as exc:
         raise SystemExit(f"--{str(exc).replace('_', '-')}") from exc
-    kept, scored = apply_corpus_gates(
-        spark,
-        kept,
-        quality_model=args.quality_model,
-        lm_ref=args.lm_ref,
-        keep_frac=args.keep_frac,
-        model_min_prob=args.model_min_prob,
-        perplexity_keep_frac=args.perplexity_keep_frac,
-    )
-    # persist: kept feeds the packing plan AND the shard join; packed
-    # feeds the write AND the summary — without these the whole
-    # curate->decontaminate->quantile chain re-executes per action
-    # (in stage-materialized mode the gated table plays that role and
-    # the persist just pins the parquet read)
-    kept = _stage_table(kept, "gated").persist()
-    if args.tokenizer_json:
-        # tokenizer-grade packing: count with the actual model
-        # tokenizer (a wrds-spark-tokenizer train artifact or any
-        # public tokenizer.json) instead of the regex approximation —
-        # Rust backend when installed, the interpreter otherwise
-        from wrds_data_pipeline_spark.functions.pybpe import (
-            local_tokenizer_factory,
+    with caching.PersistScope() as scope:
+        kept, _ = apply_corpus_gates(
+            spark,
+            kept,
+            quality_model=args.quality_model,
+            lm_ref=args.lm_ref,
+            keep_frac=args.keep_frac,
+            model_min_prob=args.model_min_prob,
+            perplexity_keep_frac=args.perplexity_keep_frac,
+            scope=scope,
         )
-        from wrds_data_pipeline_spark.functions.tokenize import (
-            tokenizer_token_counts,
-        )
+        # persist: kept feeds the packing plan AND the shard join; packed
+        # feeds the write AND the summary — without these the whole
+        # curate->decontaminate->quantile chain re-executes per action
+        # (in stage-materialized mode the gated table plays that role and
+        # the persist just pins the parquet read)
+        kept = scope.persist(_stage_table(kept, "gated"))
+        if args.tokenizer_json:
+            # tokenizer-grade packing: count with the actual model
+            # tokenizer (a wrds-spark-tokenizer train artifact or any
+            # public tokenizer.json) instead of the regex approximation —
+            # Rust backend when installed, the interpreter otherwise
+            from wrds_data_pipeline_spark.functions.pybpe import (
+                local_tokenizer_factory,
+            )
+            from wrds_data_pipeline_spark.functions.tokenize import (
+                tokenizer_token_counts,
+            )
 
-        counted = tokenizer_token_counts(
-            kept, local_tokenizer_factory(args.tokenizer_json),
-            out_col="_exact_tok",
-        )
-        packed = pack_sequences(
-            counted, args.max_tokens, token_col="_exact_tok"
-        ).persist()
-    else:
-        packed = pack_sequences(kept, args.max_tokens).persist()
-    if args.shard_format == "jsonl":
-        from wrds_data_pipeline_spark.sinks import write_jsonl_shards
+            counted = tokenizer_token_counts(
+                kept, local_tokenizer_factory(args.tokenizer_json),
+                out_col="_exact_tok",
+            )
+            packed = scope.persist(pack_sequences(
+                counted, args.max_tokens, token_col="_exact_tok"
+            ))
+        else:
+            packed = scope.persist(pack_sequences(kept, args.max_tokens))
+        if args.shard_format == "jsonl":
+            from wrds_data_pipeline_spark.sinks import write_jsonl_shards
 
-        write_jsonl_shards(
-            kept.join(packed.filter(F.col("seq_id").isNotNull()), "doc_id"),
-            f"{args.out_dir}/shards",
-            order_col=["seq_id", "seq_pos"],
+            write_jsonl_shards(
+                kept.join(
+                    packed.filter(F.col("seq_id").isNotNull()), "doc_id"
+                ),
+                f"{args.out_dir}/shards",
+                order_col=["seq_id", "seq_pos"],
+            )
+        else:
+            write_packed_shards(kept, packed, f"{args.out_dir}/shards")
+        # curation-stage audit (fates up to the near-dup/quality filters)
+        curation_report(audit).write.mode("overwrite").parquet(
+            f"{args.out_dir}/report"
         )
-    else:
-        write_packed_shards(kept, packed, f"{args.out_dir}/shards")
-    # curation-stage audit (fates up to the near-dup/quality filters)
-    curation_report(audit).write.mode("overwrite").parquet(
-        f"{args.out_dir}/report"
-    )
-    # post-filter truth: what actually landed in the shards — the
-    # curation report alone over-counts when --bench/--keep-frac
-    # dropped docs after the audit was stamped
-    summary = packed.filter(F.col("seq_id").isNotNull()).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count_distinct("seq_id").alias("n_seqs"),
-        F.sum("n_tokens").alias("n_tokens"),
-    )
-    summary.write.mode("overwrite").parquet(f"{args.out_dir}/shards_summary")
-    row = spark.read.parquet(f"{args.out_dir}/shards_summary").first()
-    kept.unpersist()
-    packed.unpersist()
-    if scored is not None:
-        scored.unpersist()
+        # post-filter truth: what actually landed in the shards — the
+        # curation report alone over-counts when --bench/--keep-frac
+        # dropped docs after the audit was stamped
+        summary = packed.filter(F.col("seq_id").isNotNull()).agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.count_distinct("seq_id").alias("n_seqs"),
+            F.sum("n_tokens").alias("n_tokens"),
+        )
+        summary.write.mode("overwrite").parquet(
+            f"{args.out_dir}/shards_summary"
+        )
+        row = spark.read.parquet(f"{args.out_dir}/shards_summary").first()
     print(
         f"{row['n_docs']} docs in {row['n_seqs']} sequences "
         f"({row['n_tokens']} tokens) -> {args.out_dir}"
@@ -1717,7 +1726,7 @@ def index_main(argv: list[str] | None = None) -> int:
                 n_groups=args.groups,
                 max_pairs_per_group=args.pairs_per_group,
                 k_shingle=args.k_shingle, id_col=args.id_col,
-            ).localCheckpoint(eager=True)
+            ).transform(caching.waist, eager=True)
         except (ValueError, FileNotFoundError) as exc:
             raise SystemExit(str(exc)) from exc
         if args.out is not None:
@@ -1759,7 +1768,7 @@ def index_main(argv: list[str] | None = None) -> int:
                 spark, args.groups_store, args.index_path,
                 n_groups=args.groups,
                 max_pairs_per_group=args.pairs_per_group,
-            ).localCheckpoint(eager=True)
+            ).transform(caching.waist, eager=True)
         except (ValueError, FileNotFoundError) as exc:
             raise SystemExit(str(exc)) from exc
         if args.out is not None:

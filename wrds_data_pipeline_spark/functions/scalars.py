@@ -48,35 +48,6 @@ def fill_null(col: Column | str, value) -> Column:
     return F.coalesce(c, F.lit(value))
 
 
-def make_datetime(d: Column | str, t: Column | str) -> Column:
-    """F6: timestamp from date + time-of-day strings; unparseable →
-    NULL (= pandas errors='coerce', cloud_TAQ/taq_chunks.py:75)."""
-    dc = F.col(d) if isinstance(d, str) else d
-    tc = F.col(t) if isinstance(t, str) else t
-    return F.to_timestamp(F.concat_ws(" ", dc.cast("string"), tc.cast("string")))
-
-
-def yyyymmdd(col: Column | str) -> Column:
-    """F8: date → 'yyyyMMdd' key (cloud_TAQ/taq_chunks.py:61)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyyMMdd")
-
-
-def parse_yyyymmdd(col: Column | str) -> Column:
-    """F9: '20160212' → date (graph_code/pyg_graphs.py:33-34)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.to_date(c, "yyyyMMdd")
-
-
-def time_of_day_seconds(ts: Column | str) -> Column:
-    """Seconds-since-midnight for time-of-day range predicates (P11):
-    integer arithmetic beats string BETWEEN and stays codegen'd."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return (
-        F.hour(c) * 3600 + F.minute(c) * 60 + F.second(c)
-    )
-
-
 def _pad_tod(t: str) -> str:
     """'09:30:00' → '09:30:00.000000' (fixed width for lexicographic
     comparison at microsecond precision)."""

@@ -56,11 +56,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.length(c)
-
-
 def punct_ratio(text: Column | str) -> Column:
     """Punctuation chars / total chars (quality signal)."""
     c = F.col(text) if isinstance(text, str) else text

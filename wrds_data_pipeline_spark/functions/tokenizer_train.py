@@ -70,6 +70,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from wrds_data_pipeline_spark import caching
 from wrds_data_pipeline_spark.functions.pybpe import _BYTE_UNICODE
 
 # The GPT-2 pre-tokenization regex, verbatim from the public
@@ -1156,7 +1157,7 @@ def learn_unigram_distributed(
         words_df.filter(F.length("word") > 0)
         .groupBy("word")
         .agg(F.sum("count").alias("count"))
-        .localCheckpoint(eager=True)  # every EM pass re-reads it
+        .transform(caching.waist, eager=True)  # every EM pass re-reads it
     )
     # substring counts (lengths 1..max_piece_len), ONE JVM pass:
     # explode every (start, len) window — length-1 rows are the char
@@ -1179,7 +1180,7 @@ def learn_unigram_distributed(
         )
         .groupBy("sub")
         .agg(F.sum("count").alias("c"))
-        .localCheckpoint(eager=False)  # two consumers below
+        .transform(caching.waist)  # two consumers below
     )
     char_counts = Counter(
         {

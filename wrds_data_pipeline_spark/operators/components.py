@@ -18,10 +18,10 @@ near-identical crawl pages can have diameter in the thousands.
 Scale notes:
 - The edge relation is snapshotted every round: without it the
   lineage doubles per iteration and Spark replays the whole prefix
-  on every action.  Default is `localCheckpoint` (single-node /
-  interactive); pass ``checkpoint_dir=`` to switch to reliable
-  `checkpoint()` on a shared filesystem, which survives executor
-  loss — the right setting on a real cluster.
+  on every action.  The snapshot is a ``caching.waist``, so a session
+  with a checkpoint dir gets reliable `checkpoint()` on a shared
+  filesystem, which survives executor loss — the right setting on a
+  real cluster.
 - Convergence is detected by testing the fixed-point property
   DIRECTLY (paper Thm 3: fixed point = disjoint star set): one
   node-keyed aggregation per round, fused into the snapshot's
@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+from wrds_data_pipeline_spark import caching
 from wrds_data_pipeline_spark.operators.store_lock import locked_store_verb
 
 
@@ -58,7 +59,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(id, group_id) for every node appearing in ``pairs``, where
     group_id is the minimum id of the node's connected component.
@@ -66,67 +66,11 @@ def connected_components(
     ``pairs`` is an undirected edge list (e.g. the output of
     minhash_lsh_candidates or jaccard_pairs).  Ids must be integral
     (cast to bigint internally).
-
-    ``checkpoint_dir``: per-round lineage truncation strategy.  None
-    (default) uses ``localCheckpoint`` — executor-memory blocks, fine
-    for a single-node/interactive session but LOST on executor
-    failure, which aborts the job mid-iteration at cluster scale.  A
-    path (HDFS/S3A at scale) switches every round to reliable
-    ``checkpoint()``: edge snapshots live on the shared filesystem and
-    survive executor loss.  Sets the SparkContext checkpoint dir only
-    if the session has none (the setting is context-global; an
-    already-configured dir wins); files accumulate per round and are
-    cleaned by
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` or by
-    deleting the directory after the result is consumed.
     """
-    if checkpoint_dir is not None:
-        sc = pairs.sparkSession.sparkContext
-        # honor a session-configured dir: setCheckpointDir is GLOBAL to
-        # the SparkContext, so clobbering it would redirect every other
-        # job's reliable checkpoints to ours
-        configured = sc.getCheckpointDir()
-        if configured is None:
-            sc.setCheckpointDir(checkpoint_dir)
-        else:
-            # getCheckpointDir returns '<scheme>:<dir>/<random-uuid>'
-            # (Spark appends a per-context UUID leaf) — the dir the
-            # caller set is the scheme-stripped PARENT, so compare at
-            # that altitude or a repeat call with the SAME dir would
-            # spuriously warn
-            import re
-            import warnings
 
-            def _strip_scheme(p: str) -> str:
-                return re.sub(
-                    r"^[a-zA-Z][a-zA-Z0-9+.-]*:(//)?", "", p
-                ).rstrip("/")
-
-            parent = _strip_scheme(configured).rsplit("/", 1)[0]
-            if parent != _strip_scheme(checkpoint_dir):
-                warnings.warn(
-                    f"connected_components: checkpoint_dir="
-                    f"{checkpoint_dir!r} ignored — SparkContext already "
-                    f"checkpoints to {configured!r} (context-global "
-                    f"setting wins); snapshots will land there",
-                    stacklevel=2,
-                )
-
-        def _snapshot_star(df: DataFrame) -> tuple[DataFrame, bool]:
-            # persist first: an unpersisted lazy checkpoint computes
-            # the lineage TWICE (once for the materializing action,
-            # again when ReliableCheckpointRDD writes the files) —
-            # Spark's own docs recommend persist-before-checkpoint
-            df = df.persist()
-            out = df.checkpoint(eager=False)
-            star = _is_star(out)
-            df.unpersist(blocking=False)
-            return out, star
-    else:
-
-        def _snapshot_star(df: DataFrame) -> tuple[DataFrame, bool]:
-            out = df.localCheckpoint(eager=False)
-            return out, _is_star(out)
+    def _snapshot_star(df: DataFrame) -> tuple[DataFrame, bool]:
+        out = caching.waist(df)
+        return out, _is_star(out)
 
     def _is_star(df: DataFrame) -> bool:
         # ONE action both materializes the round's (lazily
@@ -309,7 +253,6 @@ def update_duplicate_groups(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """INCREMENTAL duplicate-group maintenance — the "resolve" step of
     the continuous-ingest loop (probe → verify → gate → RESOLVE →
@@ -363,7 +306,7 @@ def update_duplicate_groups(
         affected_groups, "group_id", "left_semi"
     ).select(F.col("id").alias(id_a), F.col("group_id").alias(id_b))
     updated = _components_over_increment(
-        new_pairs, member_stars, id_a, id_b, max_iters, checkpoint_dir
+        new_pairs, member_stars, id_a, id_b, max_iters
     )
     return updated, affected_groups
 
@@ -374,7 +317,6 @@ def _components_over_increment(
     id_a: str,
     id_b: str,
     max_iters: int,
-    checkpoint_dir: str | None,
 ) -> DataFrame:
     """THE incremental-fold core — components over ``new_pairs ∪
     touched-group stars`` — shared by ``update_duplicate_groups``
@@ -390,19 +332,16 @@ def _components_over_increment(
     ``NoSuchElementException: key not found: u#N``, reproduced with a
     ``spark.range``-derived pair stream against an empty store — the
     first-ever increment of any programmatically generated corpus).
-    ``localCheckpoint(eager=False)`` replaces the union with a clean
+    A lazy ``caching.waist`` replaces the union with a clean
     LogicalRDD at the loop's entry, which every iteration then builds
     on safely; the relation is increment-sized and the loop was going
     to materialize it in round one anyway."""
     subgraph = (
         new_pairs.select(id_a, id_b)
         .unionByName(member_stars)
-        .localCheckpoint(eager=False)
+        .transform(caching.waist)
     )
-    return connected_components(
-        subgraph, id_a, id_b, max_iters=max_iters,
-        checkpoint_dir=checkpoint_dir,
-    )
+    return connected_components(subgraph, id_a, id_b, max_iters=max_iters)
 
 
 # the inverted sidecar of the groups store: group_id → the member
@@ -514,7 +453,7 @@ def _affected_member_shards(
         .join(affected_groups, "group_id", "left_semi")
         # tiny (affected groups × their shards); read by the stale
         # check and the shard collect
-        .localCheckpoint(eager=True)
+        .transform(caching.waist, eager=True)
     )
     stale = affected_groups.join(
         sc.select("group_id").distinct(), "group_id", "left_anti"
@@ -533,7 +472,6 @@ def update_groups_store(
     id_b: str = "id_b",
     n_shards: int = 64,
     max_iters: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Persisted form of ``update_duplicate_groups``: maintain an
     on-disk (id, group_id) table across ingest increments, rewriting
@@ -615,12 +553,11 @@ def update_groups_store(
     if not has:
         empty = spark.createDataFrame([], "id bigint, group_id bigint")
         updated, _ = update_duplicate_groups(
-            empty, new_pairs, id_a, id_b, max_iters=max_iters,
-            checkpoint_dir=checkpoint_dir,
+            empty, new_pairs, id_a, id_b, max_iters=max_iters
         )
         # small (increment-touched rows); read by the store write,
         # the sidecar write, and the caller
-        updated = updated.localCheckpoint(eager=True)
+        updated = caching.waist(updated, eager=True)
         # store first on CREATE: a crash before the sidecar lands is
         # exactly the pre-sidecar shape the migration rebuild heals
         updated.withColumn("shard", _shard(F.col("id"))).repartition(
@@ -661,7 +598,7 @@ def update_groups_store(
         # tiny (touched groups); read by the gshard collect, the
         # sidecar semi-join + stale check, the member semi-join, and
         # the sidecar preserved anti-join
-        .localCheckpoint(eager=True)
+        .transform(caching.waist, eager=True)
     )
     import os
 
@@ -679,12 +616,12 @@ def update_groups_store(
         .select(F.col("id").alias(id_a), F.col("group_id").alias(id_b))
     )
     updated = _components_over_increment(
-        new_pairs, member_stars, id_a, id_b, max_iters, checkpoint_dir
+        new_pairs, member_stars, id_a, id_b, max_iters
     )
     # small (increment-touched rows); read by the shard collect, the
     # preserved anti-join, the content union, both sidecar writes,
     # and the caller
-    updated = updated.localCheckpoint(eager=True)
+    updated = caching.waist(updated, eager=True)
 
     # SIDECAR FIRST (the crash ordering in the docstring): fresh rows
     # cover every updated group's full member-shard set (updated holds
@@ -708,7 +645,7 @@ def update_groups_store(
         .join(affected_groups, "group_id", "left_anti")
         # pinned BEFORE the overwrite of the same path: a lazy read
         # under its own overwrite only works by committer accident
-        .localCheckpoint(eager=True)
+        .transform(caching.waist, eager=True)
     )
     (
         preserved_sc.unionByName(fresh_sc)
@@ -732,7 +669,7 @@ def update_groups_store(
         .select("id", "group_id")
         .join(updated.select("id"), "id", "left_anti")
         # pinned BEFORE the overwrite, same as preserved_sc above
-        .localCheckpoint(eager=True)
+        .transform(caching.waist, eager=True)
     )
     content = preserved.unionByName(updated).withColumn(
         "shard", _shard(F.col("id"))
@@ -924,7 +861,7 @@ def audit_groups_store(
         .orderBy("_h", "group_id")
         .limit(n_groups)
         .drop("_h")
-        .localCheckpoint(eager=True)  # sidecar lookup + member join
+        .transform(caching.waist, eager=True)  # sidecar lookup + member join
     )
     m_shards = _affected_member_shards(spark, groups_store_path, g_shards, sampled)
     members_src = spark.read.parquet(groups_store_path)
@@ -944,7 +881,7 @@ def audit_groups_store(
             F.col("id").alias("id_b"),
         )
         # read by the shard collect and the verification join
-        .localCheckpoint(eager=True)
+        .transform(caching.waist, eager=True)
     )
     ids = (
         pairs.select(F.col("id_a").alias(id_col))
@@ -1052,7 +989,7 @@ def audit_groups_vectors(
         .orderBy("_h", "group_id")
         .limit(n_groups)
         .drop("_h")
-        .localCheckpoint(eager=True)
+        .transform(caching.waist, eager=True)
     )
     m_shards = _affected_member_shards(
         spark, groups_store_path, g_shards, sampled
@@ -1073,7 +1010,7 @@ def audit_groups_vectors(
             F.col("group_id").alias("id_a"),
             F.col("id").alias("id_b"),
         )
-        .localCheckpoint(eager=True)
+        .transform(caching.waist, eager=True)
     )
     idx = load_vector_index(spark, index_path)
     ids = (
@@ -1085,7 +1022,7 @@ def audit_groups_vectors(
         idx.df.select(idx.id_col, idx.vec_col)
         .join(ids, idx.id_col, "left_semi")
         .dropDuplicates([idx.id_col])  # replay residue
-        .localCheckpoint(eager=True)  # joined twice below
+        .transform(caching.waist, eager=True)  # joined twice below
     )
     a = vecs.select(
         F.col(idx.id_col).alias("id_a"), F.col(idx.vec_col).alias("_va")

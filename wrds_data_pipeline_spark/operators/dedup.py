@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wrds_data_pipeline_spark import caching
 from wrds_data_pipeline_spark.caching import PersistScope, materialize_release
 from wrds_data_pipeline_spark.functions.text import fingerprint, word_shingles
 from wrds_data_pipeline_spark.operators.store_lock import locked_store_verb
@@ -1024,7 +1025,7 @@ def demoted_salvage_candidates(
             F.explode(F.array("id_a", "id_b")).alias("_id"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(caching.waist)
     )
     ids = members.select("_id").distinct()
     if signatures is None and signatures_loader is not None:
@@ -1046,7 +1047,7 @@ def demoted_salvage_candidates(
                 for i, (a, b) in enumerate(MINHASH_AB[:n_hashes])
             ]
         )
-    mh = mh.localCheckpoint(eager=False)
+    mh = caching.waist(mh)
     rows = F.array(
         *[
             F.struct(
@@ -1234,9 +1235,8 @@ def near_dup_pairs(
         if star_accept_frac is None:
             out = scored
         else:
-            scored = scope.persist(scored)
             # PLAN-TRUNCATED handles for the gate/salvage subtree: the
-            # persists above keep the cross-call caches (a repeated
+            # scope persists keep the cross-call caches (a repeated
             # invocation's identical plan re-hits them), but a persist
             # does NOT truncate the logical plan — so every eager
             # scalar on this path (the demote decision, the salvage
@@ -1244,10 +1244,10 @@ def near_dup_pairs(
             # composed census→verify lineage, ~0.5-1s of driver time
             # per plan layer per action (measured: the salvage stages
             # of the q66-shaped corpus dropped 7.7s→1.6s and 4.7s→0.9s
-            # with truncation).  localCheckpoint reads each persisted
-            # cache once and hands the subtree a pairs-sized LogicalRDD.
-            star_t = star.localCheckpoint(eager=False)
-            scored_t = scored.localCheckpoint(eager=False)
+            # with truncation).  The waist reads each persisted cache
+            # once and hands the subtree a pairs-sized LogicalRDD.
+            star_t = caching.waist(star)
+            scored_t = caching.waist(scored, scope)
             out, demoted = _gate_and_demote(
                 scored_t, star_t, threshold, star_accept_frac,
                 scope=scope, eager_demote=bool(demoted_salvage_cap),
@@ -1343,7 +1343,7 @@ def _verify_gate_candidates(
     # salvage — with a raw persist each reference re-expands the full
     # probe lineage at analysis time, and Catalyst's relation-dedup
     # pass blows the driver heap on the composed tree (measured: OOM
-    # at 120 docs).  localCheckpoint replaces the plan with the
+    # at 120 docs).  The waist replaces the plan with the
     # (pairs-sized) computed relation; eager=False keeps it lazy until
     # the composition's first job.  At cluster scale this is the
     # materialized candidate table between the probe and verify
@@ -1351,7 +1351,7 @@ def _verify_gate_candidates(
     # (e.g. to collect shard-pruning keys off the same computed
     # relation) — don't store a second copy.
     if not cands_truncated:
-        cands = cands.localCheckpoint(eager=False)
+        cands = caching.waist(cands)
     touched = (
         cands.select(F.col("id_a").alias(id_col))
         .unionByName(cands.select(F.col("id_b").alias(id_col)))
@@ -1710,7 +1710,7 @@ def build_band_index(
     # banding derives from it — one shingle+signature pass total
     sig = minhash_signatures(
         docs, id_col, text_col, k_shingle, n_hashes
-    ).localCheckpoint(eager=False)
+    ).transform(caching.waist)
     banded = minhash_band_table(
         docs, id_col, text_col, k_shingle, n_hashes, bands, signatures=sig
     )
@@ -1751,7 +1751,7 @@ def append_band_index(
     if _band_index_has_sigs(path):
         sig = minhash_signatures(
             new_docs, id_col, text_col, meta["k_shingle"], meta["n_hashes"]
-        ).localCheckpoint(eager=False)
+        ).transform(caching.waist)
         _write_band_signatures(sig, path, meta["n_shards"], "append")
     banded = minhash_band_table(
         new_docs, id_col, text_col, meta["k_shingle"], meta["n_hashes"],
@@ -2164,7 +2164,7 @@ def ingest_increment(
                 banded, empty, max_bucket=max_bucket, scope=scope,
                 resolved_col="_resolved", carry_bucket=True,
             )
-        cands = cands.localCheckpoint(eager=False)
+        cands = caching.waist(cands)
         docs_schema = new_docs.select(id_col, text_col).schema
         if docs_has_rows:
             # stored ids touched by a candidate → their shard set
@@ -2210,7 +2210,7 @@ def ingest_increment(
                 # own persisted signatures cover every possible member
                 else (lambda ids: sig)
             ),
-        ).localCheckpoint(eager=True)  # pairs complete BEFORE appends
+        ).transform(caching.waist, eager=True)  # pairs complete BEFORE appends
 
         # append ordering: docs (verification text) → signatures →
         # bands.  Each store may run ahead of the ones after it under

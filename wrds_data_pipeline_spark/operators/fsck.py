@@ -64,6 +64,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wrds_data_pipeline_spark import caching
+
 __all__ = [
     "fsck_band_index",
     "fsck_docs_store",
@@ -542,7 +544,7 @@ def fsck_vector_index(
 
     samp = _sample_rows(
         idx.df.select(idx.id_col, idx.vec_col, "cell"), [idx.id_col], sample
-    ).localCheckpoint(eager=True)
+    ).transform(caching.waist, eager=True)
     bad_dim = samp.filter(F.size(F.col(idx.vec_col)) != dim).count()
     f["stats"]["sampled_dim_mismatches"] = bad_dim
     if bad_dim:

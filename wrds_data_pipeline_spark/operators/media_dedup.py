@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wrds_data_pipeline_spark import caching
 from wrds_data_pipeline_spark.operators.store_lock import locked_store_verb
 
 __all__ = [
@@ -119,7 +120,6 @@ def hamming_near_dup_pairs(
     bits: int = 56,
     bands: int = 4,
     max_hamming: int = 3,
-    truncate_lineage: bool = True,
     scope=None,
 ) -> DataFrame:
     """All pairs (id_a < id_b) whose hashes differ in at most
@@ -132,26 +132,19 @@ def hamming_near_dup_pairs(
     duplicates may form large clusters, use ``hamming_dup_groups`` —
     its identical-hash collapse avoids the k² pair mass entirely.
 
-    ``truncate_lineage``: the band table is referenced on BOTH sides
-    of the self-join; without truncation each side re-runs the whole
-    upstream (the mapInPandas decode — the expensive stage — twice).
-    ``localCheckpoint(eager=False)`` computes the decode once (the
-    repo's standard self-join waist, see dedup.py); pass False only
-    in plan-audit tests that need the upstream visible in explain.
+    The band table is referenced on BOTH sides of the self-join;
+    without truncation each side re-runs the whole upstream (the
+    mapInPandas decode — the expensive stage — twice), so it is cut
+    at a ``caching.waist``, which computes the decode once.
 
     ``scope`` (caching.PersistScope): additionally PERSIST the band
-    table under a caller-owned lifecycle (the near_dup_pairs
-    scored-relation pattern: persist for cross-invocation cache
-    sharing, checkpoint for lineage truncation) — a repeated
-    invocation re-reads the cached bands instead of re-running the
-    Arrow decode, the pipeline's expensive stage.
+    table under a caller-owned lifecycle — a repeated invocation
+    re-reads the cached bands instead of re-running the Arrow decode,
+    the pipeline's expensive stage.
     """
     _check_banding(bits, bands, max_hamming)
     bt = hamming_band_table(hashes, id_col, hash_col, bits, bands)
-    if scope is not None:
-        bt = scope.persist(bt)
-    if truncate_lineage:
-        bt = bt.localCheckpoint(eager=False)
+    bt = caching.waist(bt, scope)
     a, b = bt.alias("a"), bt.alias("b")
     cand = (
         a.join(
@@ -189,7 +182,6 @@ def hamming_dup_groups(
     bands: int = 4,
     max_hamming: int = 3,
     bucket_cap: int = 256,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Duplicate groups (id, group_id = min member id) over the
     perceptual-hash near-dup graph — the corpus-scale surface.
@@ -230,7 +222,7 @@ def hamming_dup_groups(
     # the hash relation feeds the rep aggregation AND the identity
     # join; the band table feeds the census AND both join sides —
     # truncate once so the decode stage runs exactly once
-    h = h.localCheckpoint(eager=False)
+    h = caching.waist(h)
     # 1. one representative per distinct hash + O(k) identity edges
     reps = h.groupBy("_hash").agg(F.min("_id").alias("_rep"))
     ident_edges = (
@@ -244,7 +236,7 @@ def hamming_dup_groups(
     )
     bt = hamming_band_table(
         rep_hashes, "_id", "_hash", bits, bands
-    ).localCheckpoint(eager=False)
+    ).transform(caching.waist)
 
     # 3. census → cap: oversized buckets demote to star edges
     census = bt.groupBy("band", "band_val").agg(
@@ -302,9 +294,7 @@ def hamming_dup_groups(
     )
 
     edges = near_edges.unionByName(star_edges).unionByName(ident_edges)
-    return connected_components(
-        edges, checkpoint_dir=checkpoint_dir
-    ).withColumnRenamed("id", id_col)
+    return connected_components(edges).withColumnRenamed("id", id_col)
 
 
 # --------------------------------------------------------------------------
@@ -384,7 +374,7 @@ def probe_media_store(
     bt_inc = hamming_band_table(
         hashes, id_col, hash_col, bits, bands
     ).withColumn("shard", _media_band_shard(n_shards))
-    bt_inc = bt_inc.localCheckpoint(eager=True)  # referenced twice
+    bt_inc = caching.waist(bt_inc, eager=True)  # referenced twice
     touched = [
         r["shard"] for r in bt_inc.select("shard").distinct().collect()
     ]
@@ -448,9 +438,12 @@ def ingest_media_hashes(
         {"hash_bits": bits, "bands": bands, "n_shards": n_shards},
         "ingest_media_hashes",
     )
-    h = hashes.filter(F.col(hash_col).isNotNull()).select(
-        F.col(id_col).alias(id_col), F.col(hash_col).alias(hash_col)
-    ).localCheckpoint(eager=True)  # decode once: probe + self + append
+    h = caching.waist(  # decode once: probe + self + append
+        hashes.filter(F.col(hash_col).isNotNull()).select(
+            F.col(id_col).alias(id_col), F.col(hash_col).alias(hash_col)
+        ),
+        eager=True,
+    )
 
     vs_stored = probe_media_store(
         h, store_path, max_hamming, id_col, hash_col
@@ -460,7 +453,7 @@ def ingest_media_hashes(
     ).select(
         "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )
-    pairs = vs_stored.unionByName(vs_new).localCheckpoint(eager=True)
+    pairs = caching.waist(vs_stored.unionByName(vs_new), eager=True)
 
     bt = (
         hamming_band_table(h, id_col, hash_col, bits, bands)

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from wrds_data_pipeline_spark import caching
 from wrds_data_pipeline_spark.functions.text import bpe_ish_token_count, tokens
 
 
@@ -108,25 +109,15 @@ def pack_sequences(
     token_col: str | None = None,
     order_col: str | None = None,
     chunk_bins: int = 64,
-    truncate_lineage: bool = True,
-    reliable_checkpoint: bool = False,
     scope=None,
 ) -> DataFrame:
     """(id, n_tokens, seq_id, seq_pos, oversize) — greedy packing of
     documents into sequences of at most ``max_tokens`` tokens.
 
-    Fault tolerance at the lineage waist: the default truncation is
-    ``localCheckpoint`` — blocks live on executors WITHOUT
-    replication, so on a preemptible cluster losing an executor makes
-    the truncated lineage unrecomputable and FAILS the job instead of
-    recomputing (acceptable on a stable cluster / local mode; the
-    waist is increment-sized metadata and re-running the job is
-    cheap).  On spot/preemptible fleets pass
-    ``reliable_checkpoint=True`` to write the waist to the
-    fault-tolerant checkpoint directory instead
-    (``sc.setCheckpointDir`` must have been called — HDFS/S3 on a
-    real cluster); ``truncate_lineage=False`` remains the
-    no-truncation escape hatch.
+    The chunk-assignment relation is cut at a ``caching.waist`` (under
+    ``scope`` when given); on spot/preemptible fleets set a
+    SparkContext checkpoint dir and the waist becomes a reliable
+    checkpoint that survives executor loss.
 
     - ``token_col``: precomputed token counts; default derives
       bpe_ish_token_count(text_col).
@@ -178,26 +169,11 @@ def pack_sequences(
     # action — measured ~7x on the whole query (the q43/q66 lesson:
     # any multiply-referenced relation feeding HOF lambdas needs
     # truncation at its waist).  eager=False keeps this lazy; the
-    # relation is increment-sized metadata (id, count, chunk).
-    # ``truncate_lineage=False`` exists for the PLAN AUDITS
-    # (tests/test_corpus_plans): truncation replaces the upstream
-    # plan with a Scan ExistingRDD in explain(), which would hide the
-    # range-partitioning / no-global-window properties they assert —
-    # the logical composition is identical either way.
-    if scope is not None:
-        # caller-owned persist of the chunk-assignment waist (narrow
-        # metadata: id, count, chunk) — the tokenize + range-partition
-        # sampling + prefix-sum window re-ran on every invocation; a
-        # repeated invocation now re-reads the cache, and the
-        # truncation below only re-materializes its RDD blocks from it
-        # (the hamming_near_dup_pairs persist-then-checkpoint pattern)
-        fit = scope.persist(fit)
-    if truncate_lineage:
-        fit = (
-            fit.checkpoint(eager=False)
-            if reliable_checkpoint
-            else fit.localCheckpoint(eager=False)
-        )
+    # relation is increment-sized metadata (id, count, chunk).  With
+    # a caller scope it is also persisted: the tokenize + range-
+    # partition sampling + prefix-sum window re-ran on every
+    # invocation; a repeated invocation now re-reads the cache.
+    fit = caching.waist(fit, scope)
 
     # greedy first-fit needs >= ceil(2*chunk_tokens/max)+1 ids per
     # chunk in the worst case (consecutive sequences sum > max); 4x

@@ -36,6 +36,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wrds_data_pipeline_spark import caching
 from .pq import PQCodebooks, pq_encode, pq_train
 from wrds_data_pipeline_spark.operators.store_lock import locked_store_verb
 from .similarity import (
@@ -764,7 +765,7 @@ def semantic_ingest_increment(
     partitions and append is a single store write — no lockstep
     ordering to preserve under a crash.
 
-    Crash/replay: pairs are materialized (eager localCheckpoint)
+    Crash/replay: pairs are materialized (an eager waist)
     BEFORE the append, so every pair is attributed to exactly one
     increment.  Re-running an interrupted increment emits the same
     pair set (its stored copy only produces self-pairs, excluded by
@@ -842,7 +843,7 @@ def semantic_ingest_increment(
         pairs = semantic_dup_pairs(
             new_embeddings, idx.centroid_list(), threshold,
             id_col=id_col, vec_col=vec_col,
-        ).localCheckpoint(eager=True)
+        ).transform(caching.waist, eager=True)
         if groups_store_path is not None:
             from wrds_data_pipeline_spark.operators.components import (
                 update_groups_store,
@@ -880,7 +881,7 @@ def semantic_ingest_increment(
                 "_pcells", topk_cells_expr(cents, vec_col, k)
             )
             .withColumn("cell", F.element_at("_pcells", 1))
-            .localCheckpoint(eager=True)
+            .transform(caching.waist, eager=True)
         )
         cells = sorted(
             r["c"]
@@ -891,7 +892,7 @@ def semantic_ingest_increment(
     else:
         assigned = _assigner_for(cents, vec_col)(
             new_embeddings
-        ).localCheckpoint(eager=True)
+        ).transform(caching.waist, eager=True)
         cells = sorted(
             r["cell"]
             for r in assigned.select("cell").distinct().collect()
@@ -957,7 +958,7 @@ def semantic_ingest_increment(
             F.min("cell").alias("cell"),
             F.max("cos_sim").alias("cos_sim"),
         )
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs = caching.waist(pairs, eager=True)
     to_write = assigned.drop("_pcells")
     if idx.codebooks is not None:
         to_write = pq_encode(to_write, idx.codebooks, vec_col=vec_col)
@@ -1041,7 +1042,8 @@ def evaluate_vector_index(
         .orderBy("_h", "query_id")
         .limit(n_queries)
         .drop("_h")
-        .localCheckpoint(eager=True)  # truth + ANN + probe map reuse it
+        # truth + ANN + probe map reuse it
+        .transform(caching.waist, eager=True)
     )
     truth = (
         brute_force_topk_batch(

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from wrds_data_pipeline_spark import caching
 from wrds_data_pipeline_spark.operators.store_lock import store_write_locks
 
 from wrds_data_pipeline_spark.functions.text import fingerprint
@@ -148,47 +149,47 @@ def _run_indexed_stream(
     def _sink(bdf: DataFrame, _epoch: int) -> None:
         if bdf.isEmpty():
             return
-        rows = index_rows(bdf).persist()
-        # what gets APPENDED (and therefore what `stored` reads back):
-        # by default the probe relation itself; twins whose probe
-        # relation is richer than their membership index (paragraph
-        # dedup: full paragraphs probed, distinct hashes stored) pass
-        # index_select to shrink it
-        to_index = index_select(rows) if index_select is not None else rows
-        row_schema = to_index.schema
-        # the shared probe (underscore/dot residue is not data): the
-        # explicit read schema makes a false positive benign here,
-        # but the check should not drift from its siblings'
-        has_index = _store_has_rows(index_dir)
-        stored = (
-            bdf.sparkSession.read.schema(row_schema).parquet(index_dir)
-            if has_index
-            else bdf.sparkSession.createDataFrame([], row_schema)
-        )
-        # twins whose emitted rows need the raw batch (span dedup:
-        # docs below the window width have no index rows but must
-        # still be emitted) declare a 3-arg pairs(rows, stored, bdf)
-        p = (
-            pairs(rows, stored, bdf)
-            if _pairs_takes_batch
-            else pairs(rows, stored)
-        ).toPandas()
-        if len(p):
-            out.append(p)
-        if dedup_index:
-            # membership indexes (paragraph/span hash sets): append
-            # only hashes the store does not already hold — without
-            # this a ubiquitous paragraph/gram re-appends once per
-            # batch forever (the anti-join reads the same stored
-            # relation the probe just scanned; at production scale
-            # this is the transactional table's MERGE)
-            to_index = to_index.join(
-                stored.select(*to_index.columns).distinct(),
-                on=list(to_index.columns),
-                how="left_anti",
+        with caching.PersistScope() as scope:
+            rows = scope.persist(index_rows(bdf))
+            # what gets APPENDED (and therefore what `stored` reads back):
+            # by default the probe relation itself; twins whose probe
+            # relation is richer than their membership index (paragraph
+            # dedup: full paragraphs probed, distinct hashes stored) pass
+            # index_select to shrink it
+            to_index = index_select(rows) if index_select is not None else rows
+            row_schema = to_index.schema
+            # the shared probe (underscore/dot residue is not data): the
+            # explicit read schema makes a false positive benign here,
+            # but the check should not drift from its siblings'
+            has_index = _store_has_rows(index_dir)
+            stored = (
+                bdf.sparkSession.read.schema(row_schema).parquet(index_dir)
+                if has_index
+                else bdf.sparkSession.createDataFrame([], row_schema)
             )
-        to_index.write.mode("append").parquet(index_dir)
-        rows.unpersist()
+            # twins whose emitted rows need the raw batch (span dedup:
+            # docs below the window width have no index rows but must
+            # still be emitted) declare a 3-arg pairs(rows, stored, bdf)
+            p = (
+                pairs(rows, stored, bdf)
+                if _pairs_takes_batch
+                else pairs(rows, stored)
+            ).toPandas()
+            if len(p):
+                out.append(p)
+            if dedup_index:
+                # membership indexes (paragraph/span hash sets): append
+                # only hashes the store does not already hold — without
+                # this a ubiquitous paragraph/gram re-appends once per
+                # batch forever (the anti-join reads the same stored
+                # relation the probe just scanned; at production scale
+                # this is the transactional table's MERGE)
+                to_index = to_index.join(
+                    stored.select(*to_index.columns).distinct(),
+                    on=list(to_index.columns),
+                    how="left_anti",
+                )
+            to_index.write.mode("append").parquet(index_dir)
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
@@ -360,7 +361,6 @@ def streaming_near_dedup_verified(
 
     import pandas as pd
 
-    from wrds_data_pipeline_spark.caching import PersistScope
     from wrds_data_pipeline_spark.operators.dedup import (
         _verify_gate_candidates,
         lsh_probe_bands,
@@ -426,7 +426,7 @@ def streaming_near_dedup_verified(
         if bdf.isEmpty():
             return
         ss = bdf.sparkSession
-        with PersistScope() as scope:
+        with caching.PersistScope() as scope:
             sig = scope.persist(
                 minhash_signatures(
                     bdf, id_col, text_col, k_shingle, n_hashes
@@ -452,7 +452,7 @@ def streaming_near_dedup_verified(
             cands = lsh_probe_bands(
                 banded, stored_bands, max_bucket=max_bucket, scope=scope,
                 resolved_col="_resolved", carry_bucket=True,
-            ).localCheckpoint(eager=False)
+            ).transform(caching.waist)
             docs_schema = bdf.select(id_col, text_col).schema
             if _has_rows(docs_dir):
                 # stored ids touched by a candidate → their shard set
