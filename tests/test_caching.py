@@ -166,6 +166,36 @@ def test_release_sweeps_past_failures(spark):
         orig_unpersist(blocking=True)
 
 
+def test_persist_skips_cached_plans(spark):
+    """A plan that is already cached is not tracked again, by the same
+    scope or another one; its first owner's release frees it."""
+    df = spark.range(37).select((F.col("id") * 3).alias("x"))
+    with PersistScope() as owner:
+        owner.persist(df)
+        owner.persist(df)
+        other = PersistScope()
+        other.persist(spark.range(37).select((F.col("id") * 3).alias("x")))
+        assert (owner.tracked, other.tracked) == (1, 0)
+    assert df.storageLevel.useMemory is False
+
+
+def test_driver_scope_does_not_regrow(spark, sf_dir, monkeypatch):
+    """A repeated headline query finds its plans cached and leaves the
+    never-released driver scope at the size its first call left."""
+    from wrds_data_pipeline_spark import driver_queries as dq
+
+    scope = PersistScope()
+    monkeypatch.setattr(dq, "_DRIVER_SCOPE", scope)
+    try:
+        dq.q27_minhash_lsh(spark, sf_dir)
+        tracked = scope.tracked
+        assert tracked >= 1
+        dq.q27_minhash_lsh(spark, sf_dir)
+        assert scope.tracked == tracked
+    finally:
+        scope.release()
+
+
 def test_jaccard_exact_path_default_frees(spark):
     from wrds_data_pipeline_spark.operators.dedup import jaccard_pairs
 

@@ -148,3 +148,46 @@ def test_twap_matches_replay(spark):
     assert abs(got[("A", "10:00")] - (1.0 * 10 + 3.0 * 50) / 60) < 1e-12
     assert abs(got[("A", "10:01")] - 5.0) < 1e-12
     assert abs(got[("B", "10:00")] - 7.0) < 1e-12
+
+
+@pytest.mark.parametrize("direction", ["ffill", "bfill"])
+def test_fill_over_null_buckets_matches_pandas(spark, direction):
+    """Buckets whose sampled value is NULL (a mean over NULLs only) are
+    filled like empty ones — pandas' NaN buckets — including leading,
+    trailing and all-NULL series."""
+    import datetime
+
+    T0 = datetime.datetime(2024, 1, 2, 10, 0, 0)
+    events = {
+        # bucket 0 valued, 1 all-NULL, 2 empty, 3 all-NULL, 5 one value
+        # among NULLs, 7 trailing all-NULL
+        "A": [(0, 1.0), (65, None), (70, None), (200, None), (250, None),
+              (300, 4.0), (310, None), (420, None)],
+        # leading and trailing all-NULL buckets around one value
+        "B": [(0, None), (120, 2.0), (240, None)],
+        # no value at all
+        "C": [(0, None), (100, None)],
+    }
+    rows = [
+        (k, T0 + datetime.timedelta(seconds=s), v)
+        for k, evs in events.items() for s, v in evs
+    ]
+    df = spark.createDataFrame(rows, "sym string, ts timestamp, price double")
+    got = (
+        resample_ffill(df, ["sym"], "ts", "price", 60, agg="mean",
+                       direction=direction)
+        .toPandas().sort_values(["sym", "bucket"]).reset_index(drop=True)
+    )
+    frames = []
+    for k, evs in events.items():
+        s = pd.Series(
+            [v for _, v in evs], dtype="float64",
+            index=[T0 + datetime.timedelta(seconds=t) for t, _ in evs],
+        ).resample("60s").last()
+        s = s.ffill() if direction == "ffill" else s.bfill()
+        frames.append(pd.DataFrame({"sym": k, "bucket": s.index, "price": s.values}))
+    want = pd.concat(frames).reset_index(drop=True)
+
+    assert got["sym"].tolist() == want["sym"].tolist()
+    assert (got["bucket"].values == want["bucket"].values).all()
+    pd.testing.assert_series_equal(got["price"], want["price"], check_names=False)

@@ -116,10 +116,10 @@ midnight_series = st.lists(
 )
 
 
-def _day_anchored_oracle(rows, freq):
-    """Pure-python replay of the engine's day-anchored resample+ffill:
+def _day_anchored_oracle(rows, freq, direction="ffill"):
+    """Pure-python replay of the engine's day-anchored resample+fill:
     bucket = day-midnight-anchored slot; grid = per civil day, span
-    start..end; fill forward across days."""
+    start..end; fill forward (or backward) across days."""
     def bkt(ts):
         day = ts.replace(hour=0, minute=0, second=0, microsecond=0)
         off = int((ts - day).total_seconds())
@@ -143,22 +143,39 @@ def _day_anchored_oracle(rows, freq):
             t += datetime.timedelta(seconds=freq)
         day += datetime.timedelta(days=1)
     out, cur = [], None
-    for t in grid:
+    for t in grid if direction == "ffill" else reversed(grid):
         cur = sampled.get(t, cur)
         out.append((t, cur))
-    return out
+    return out if direction == "ffill" else out[::-1]
 
 
-@settings(
+midnight_property = settings(
     max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(events=midnight_series, freq=st.sampled_from([7, 60, 97, 450, 3600]))
+midnight_cases = given(
+    events=midnight_series, freq=st.sampled_from([7, 60, 97, 450, 3600])
+)
+
+
+@midnight_property
+@midnight_cases
 def test_ffill_midnight_crossing_property(spark, events, freq):
+    _check_midnight_crossing(spark, events, freq, "ffill")
+
+
+@midnight_property
+@midnight_cases
+def test_bfill_midnight_crossing_property(spark, events, freq):
+    _check_midnight_crossing(spark, events, freq, "bfill")
+
+
+def _check_midnight_crossing(spark, events, freq, direction):
     """Grids that cross midnight stay aligned with the day-anchored
-    bucketize for every frequency; when the frequency divides 86400
-    the result also equals pandas' whole-series resample."""
+    bucketize for every frequency, filled either way; when the
+    frequency divides 86400 the result also equals pandas'
+    whole-series resample."""
     from wrds_data_pipeline_spark.operators.resample import resample_ffill
 
     dedup = {}
@@ -169,11 +186,12 @@ def test_ffill_midnight_crossing_property(spark, events, freq):
 
     df = spark.createDataFrame(rows, ["key", "ts", "value"])
     got = (
-        resample_ffill(df, ["key"], "ts", "value", freq, agg="last")
+        resample_ffill(df, ["key"], "ts", "value", freq, agg="last",
+                       direction=direction)
         .toPandas().sort_values("bucket").reset_index(drop=True)
     )
 
-    want = _day_anchored_oracle(rows, freq)
+    want = _day_anchored_oracle(rows, freq, direction)
     assert len(got) == len(want), (len(got), len(want))
     for (gb, gv), (wb, wv) in zip(
         zip(got["bucket"].dt.to_pydatetime(), got["value"]), want
@@ -183,7 +201,8 @@ def test_ffill_midnight_crossing_property(spark, events, freq):
 
     if 86400 % freq == 0:  # pandas parity holds exactly for divisors
         s = pd.Series({ts: v for _, ts, v in rows}).sort_index()
-        ps = s.resample(f"{freq}s").last().ffill()
+        ps = s.resample(f"{freq}s").last()
+        ps = ps.ffill() if direction == "ffill" else ps.bfill()
         assert len(ps) == len(got)
         assert (got["bucket"].values == ps.index.values).all()
         assert (got["value"].values == ps.values).all()

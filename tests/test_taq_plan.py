@@ -77,3 +77,44 @@ def test_all_universe_days_present(spark, wrds):
     per_day = got.groupBy("date").agg(F.countDistinct("permno").alias("n")).collect()
     ns = {str(r["date"]): r["n"] for r in per_day}
     assert min(ns.values()) < max(ns.values())
+
+
+def _physical_nodes(plan, under_broadcast=False):
+    """(node, under a BroadcastExchange) for every node of a physical
+    plan, walking into AQE's current plan and into the plan behind a
+    cached relation (another test may have cached the same panel)."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        yield from _physical_nodes(plan.executedPlan(), under_broadcast)
+        return
+    if plan.nodeName().endswith("QueryStage"):
+        yield from _physical_nodes(plan.plan(), under_broadcast)
+        return
+    if plan.nodeName() == "InMemoryTableScan":
+        yield from _physical_nodes(plan.relation().cachedPlan(), under_broadcast)
+        return
+    yield plan, under_broadcast
+    below = under_broadcast or plan.nodeName() == "BroadcastExchange"
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _physical_nodes(children.apply(i), below)
+
+
+def test_resample_plan_has_one_quote_shuffle(spark, wrds):
+    """The resampler shuffles the quotes once, on (permno, date): A1,
+    bucket-last and the fill window share that partitioning, no grid is
+    joined back (no SortMergeJoin) and the quote scan is not replayed."""
+    universe = _universe_from_taqmclink(wrds["taqmclink"])
+    plan = resampled_prices(wrds["nbbo"], universe, freq_seconds=60)._jdf
+    nodes = list(_physical_nodes(plan.queryExecution().executedPlan()))
+    shuffles = [
+        n.toString() for n, in_bc in nodes
+        if n.nodeName() == "Exchange" and not in_bc
+    ]
+    assert len(shuffles) == 1, shuffles
+    assert "hashpartitioning(permno" in shuffles[0], shuffles
+    assert not [n for n, _ in nodes if n.nodeName() == "SortMergeJoin"]
+    quote_scans = [
+        n for n, _ in nodes
+        if n.nodeName().startswith("Scan") and "nbbo" in n.toString()
+    ]
+    assert len(quote_scans) == 1

@@ -45,6 +45,7 @@ fine for local mode and stable clusters.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
@@ -59,7 +60,12 @@ class PersistScope:
 
     def persist(self, df: DataFrame) -> DataFrame:
         """Persist ``df`` (Spark's default storage level) and track it
-        for release."""
+        for release.  A plan that is already cached comes back
+        untracked: the CacheManager keeps one entry per plan, which its
+        first owner's release frees for every holder, so tracking it
+        again would only grow a long-lived scope on each repeat."""
+        if df.storageLevel != StorageLevel.NONE:
+            return df
         df = df.persist()
         self._dfs.append(df)
         return df

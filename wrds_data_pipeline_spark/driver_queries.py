@@ -638,8 +638,8 @@ def q13_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 resample + forward-fill (the engine's hardest time-series
     operator; pandas `resample(freq).ffill()` at
     cloud_TAQ/taq_chunks.py:86-91): per-user 6h grid, bucket-mean,
-    gaps forward-filled.  Dense grid generated distributedly
-    (sequence+explode), fill via ignorenulls window per user."""
+    gaps forward-filled.  One ignorenulls window per user fills, and
+    sequence+explode emits each gap's empty buckets distributedly."""
     from wrds_data_pipeline_spark.operators.resample import resample_ffill
 
     e = _events(spark, sf_dir).select("user_id", "ts", "value")

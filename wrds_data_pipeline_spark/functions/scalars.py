@@ -48,31 +48,36 @@ def fill_null(col: Column | str, value) -> Column:
     return F.coalesce(c, F.lit(value))
 
 
-def _pad_tod(t: str) -> str:
-    """'09:30:00' → '09:30:00.000000' (fixed width for lexicographic
-    comparison at microsecond precision)."""
-    if "." in t:
-        head, frac = t.split(".")
-        return f"{head}.{frac:<06s}"
-    return t + ".000000"
+def _tod_micros(t: str) -> int:
+    """'09:30:00' / '16:00:00.5' → microseconds since midnight."""
+    hms, _, frac = t.partition(".")
+    h, m, sec = (int(x) for x in hms.split(":"))
+    return ((h * 60 + m) * 60 + sec) * 1_000_000 + int(f"{frac:<06s}")
 
 
 def in_market_hours(
     ts: Column | str, open_time: str = "09:30:00", close_time: str = "16:00:00",
     closed_right: bool = True,
 ) -> Column:
-    """P11/P12/P13: market-hours clip at microsecond precision via a
-    fixed-width 'HH:mm:ss.SSSSSS' compare (correct lexicographically;
-    a bare 'HH:mm:ss' compare would truncate, wrongly keeping e.g.
+    """P11/P12/P13: market-hours clip at microsecond precision.  A
+    bare 'HH:mm:ss' compare would truncate, wrongly keeping e.g.
     16:00:00.5 inside a 09:30–16:00 BETWEEN — a Postgres TIME
-    excludes it, cloud_TAQ/taq_chunks.py:63).  The notebook variant
-    uses `< 16:00` (cell 14) — ``closed_right`` selects."""
+    excludes it, cloud_TAQ/taq_chunks.py:63.  The notebook variant
+    uses `< 16:00` (cell 14) — ``closed_right`` selects.
+
+    Compares integer microseconds of the wall-clock day (hour, minute
+    and second fields plus the sub-second micros), so the result equals
+    a 'HH:mm:ss.SSSSSS' string compare in any session time zone, DST
+    days included, without formatting a string per row."""
     c = F.col(ts) if isinstance(ts, str) else ts
-    tod = F.date_format(c, "HH:mm:ss.SSSSSS")
-    lo = F.lit(_pad_tod(open_time))
-    hi_lit = F.lit(_pad_tod(close_time))
-    hi = tod <= hi_lit if closed_right else tod < hi_lit
-    return (tod >= lo) & hi
+    secs = (F.hour(c) * 60 + F.minute(c)) * 60 + F.second(c)
+    # the cast lets TIMESTAMP_NTZ through unix_micros; it moves whole
+    # seconds only, never the sub-second part
+    frac = F.pmod(F.unix_micros(c.cast("timestamp")), F.lit(1_000_000))
+    tod = secs.cast("bigint") * 1_000_000 + frac
+    hi = F.lit(_tod_micros(close_time))
+    in_hi = tod <= hi if closed_right else tod < hi
+    return (tod >= F.lit(_tod_micros(open_time))) & in_hi
 
 
 def direction_label(curr: Column | str, prev: Column | str) -> Column:

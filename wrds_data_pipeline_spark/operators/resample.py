@@ -8,21 +8,27 @@ observation in the bucket; empty buckets inherit the previous bucket's
 value (forward-fill), and buckets before the first observation stay
 NULL.
 
-Spark-first formulation (no per-key driver loop, no UDF):
+Spark-first formulation (no per-key driver loop, no UDF, no grid
+relation):
 
 1. bucket-last: ``groupBy(key, floor(ts/freq))`` + ``max_by(value, ts)``
-   — one shuffle on (key, bucket); map-side partial agg collapses the
-   O(10^5) quotes/bucket to 1 row before shuffling, so the shuffle
-   carries only O(keys × buckets).
-2. dense grid: per (key, grid-span) ``sequence(start, end, step)`` +
-   ``explode`` — generated distributedly, never on the driver.
-3. gap fill: ``last(value, ignorenulls=True)`` over
-   ``Window.partitionBy(key [, day]).orderBy(bucket)``.
+   — one row per (key, sampled bucket).
+2. fill: one window over the sampled rows, partitioned by the grid
+   keys and ordered by bucket, computes ``lead(bucket)`` and the fill
+   value — ``last(value, ignorenulls)`` for ffill,
+   ``first(value, ignorenulls)`` over the following rows for bfill.
+3. gap: ``explode(sequence(bucket, next - 1µs, freq))`` emits every
+   grid bucket up to the successor, carrying the fill value.  The
+   empty buckets are generated next to the value they inherit, so no
+   dense grid is ever joined back to the samples.
 
-Scale note: the window in step 3 partitions by (key, day) when a
-``day_col`` is given — each partition is then ≤ one symbol-day
-(≈ 23.4k one-second buckets), bounded regardless of total data size,
-so no single task ever degenerates (SURVEY §4.1).
+Both steps group by the grid keys (plus bucket), so an input already
+hash-partitioned by the grid keys needs no further Exchange
+(``plans/taq.py`` partitions by (permno, date) once).
+
+Scale note: with a ``day_col`` every partition of the window is ≤ one
+symbol-day (≈ 23.4k one-second buckets), bounded regardless of total
+data size, so no single task ever degenerates (SURVEY §4.1).
 """
 
 from __future__ import annotations
@@ -116,49 +122,35 @@ def _twap(
     )
 
 
-def dense_grid(
-    sampled: DataFrame,
-    key_cols: list[str],
-    freq_seconds: int,
-    bucket_col: str = "bucket",
+def _gap_buckets(
+    spans: DataFrame, freq_seconds: int, split_days: bool
 ) -> DataFrame:
-    """Per-key dense bucket grid spanning each key's observed min/max
-    bucket (pandas resample semantics).
+    """One row per grid bucket in ``[bucket, _next)`` as ``_g``; the
+    last sampled bucket of a partition (``_next`` NULL) yields itself.
 
-    Takes the already-bucketized output of :func:`resample`, NOT the
-    raw events: the span aggregation then groups the same
-    (keys, bucket) exchange the bucket-last agg produced, so Catalyst
-    reuses the shuffle instead of replaying the whole upstream
-    pipeline a second time.
-
-    The grid is generated per civil day so every grid point lands on
-    a :func:`bucketize` day-anchored slot.  A single continuous
-    ``sequence(lo, hi, freq)`` drifts off the day anchor whenever the
-    frequency does not divide 86400 (86400 % 7 = 3): past the first
-    midnight its points would match no bucketized observation, the
-    left join would null them all, and ffill would carry day-1 values
-    forever — found by the midnight-crossing Hypothesis sweep."""
-    spans = sampled.groupBy(*key_cols).agg(
-        F.min(bucket_col).alias("_lo"), F.max(bucket_col).alias("_hi")
-    )
-    days = spans.select(
-        *key_cols,
-        "_lo",
-        "_hi",
-        F.explode(F.sequence(F.to_date("_lo"), F.to_date("_hi"))).alias("_day"),
+    The exclusive bound ``_next - 1µs`` needs no ``_next - step``
+    arithmetic, which would be off the grid across a midnight.  With
+    ``split_days`` a gap is enumerated per civil day, each day from its
+    midnight (or ``bucket`` on its first day) to its last
+    :func:`bucketize` slot: one continuous ``sequence(lo, hi, freq)``
+    drifts off the day anchor whenever the frequency does not divide
+    86400 (86400 % 7 = 3), which the midnight-crossing Hypothesis sweep
+    found."""
+    step = F.expr(f"INTERVAL {freq_seconds} SECONDS")
+    lo = F.col("bucket")
+    hi = F.coalesce(F.col("_next") - F.expr("INTERVAL 1 MICROSECOND"), lo)
+    if not split_days:
+        return spans.withColumn("_g", F.explode(F.sequence(lo, hi, step)))
+    days = spans.withColumn("_hi", hi).withColumn(
+        "_day", F.explode(F.sequence(F.to_date(lo), F.to_date("_hi")))
     )
     midnight = F.col("_day").cast("timestamp")
-    # first slot of the day (the span's own start on its first day),
-    # last slot = largest freq-multiple before the next midnight,
-    # clamped to the span end on its last day.
-    start = F.when(F.col("_day") == F.to_date("_lo"), F.col("_lo")).otherwise(midnight)
     last_slot = 86399 - (86399 % freq_seconds)
     day_end = F.timestamp_seconds(F.unix_timestamp(midnight) + F.lit(last_slot))
+    start = F.when(F.col("_day") == F.to_date(lo), lo).otherwise(midnight)
     end = F.when(F.col("_day") == F.to_date("_hi"), F.col("_hi")).otherwise(day_end)
-    step = F.expr(f"INTERVAL {freq_seconds} SECONDS")
-    return days.select(
-        *key_cols,
-        F.explode(F.sequence(start, end, step)).alias("bucket"),
+    return days.withColumn("_g", F.explode(F.sequence(start, end, step))).drop(
+        "_hi", "_day"
     )
 
 
@@ -174,36 +166,46 @@ def resample_ffill(
 ) -> DataFrame:
     """W1 (ffill) / W2 (bfill): dense per-key grid with gap fill.
 
-    Returns (key_cols..., bucket, value) where value is the filled
-    series.  ``day_col`` (if given) bounds the fill window to one day
-    per key — matching the reference's per-day processing AND keeping
-    window partitions small at scale.
-    """
-    # with a day column, both the grid and the fill are per (key, day):
-    # no bucket spans the overnight gap, matching the reference's
-    # per-day processing (taq_chunks.py:111-147)
+    Returns (key_cols..., [day_col,] bucket, value) where value is the
+    filled series over every grid bucket from each key's first to its
+    last sampled bucket.  ``day_col`` (if given) bounds grid and fill
+    to one day per key — matching the reference's per-day processing
+    (taq_chunks.py:111-147) AND keeping window partitions small at
+    scale; it must be the civil day of ``ts_col``, as then no gap
+    crosses a midnight.
+
+    One window over the sampled rows computes each bucket's successor
+    and its fill value; each sampled bucket then explodes into the gap
+    up to its successor, carrying that value."""
     grid_keys = [*key_cols, day_col] if day_col else key_cols
     sampled = resample(df, grid_keys, ts_col, value_col, freq_seconds, agg)
-    grid = dense_grid(sampled, grid_keys, freq_seconds)
-    full = grid.join(sampled, [*grid_keys, "bucket"], "left")
-
-    part = grid_keys
+    w = W.partitionBy(*grid_keys).orderBy("bucket")
+    own = F.col(value_col)
     if direction == "ffill":
-        w = (
-            W.partitionBy(*part)
-            .orderBy("bucket")
-            .rowsBetween(W.unboundedPreceding, 0)
+        fill = F.last(own, ignorenulls=True).over(
+            w.rowsBetween(W.unboundedPreceding, 0)
         )
-        fill = F.last(value_col, ignorenulls=True).over(w)
     elif direction == "bfill":
-        w = (
-            W.partitionBy(*part)
-            .orderBy("bucket")
-            .rowsBetween(0, W.unboundedFollowing)
+        # the gap after a bucket takes the next non-null value; the
+        # bucket itself keeps its own unless that is NULL
+        fill = F.first(own, ignorenulls=True).over(
+            w.rowsBetween(1, W.unboundedFollowing)
         )
-        fill = F.first(value_col, ignorenulls=True).over(w)
     else:
         raise ValueError(f"unsupported direction: {direction}")
 
-    out = full.withColumn(value_col, fill)
-    return out
+    spans = sampled.filter(F.col("bucket").isNotNull()).select(
+        *grid_keys,
+        "bucket",
+        own,
+        F.lead("bucket").over(w).alias("_next"),
+        fill.alias("_fill"),
+    )
+    filled = F.col("_fill")
+    if direction == "bfill":
+        filled = F.when(
+            F.col("_g") == F.col("bucket"), F.coalesce(own, filled)
+        ).otherwise(filled)
+    return _gap_buckets(spans, freq_seconds, split_days=day_col is None).select(
+        *grid_keys, F.col("_g").alias("bucket"), filled.alias(value_col)
+    )

@@ -9,16 +9,18 @@ and the chunking obsolete):
 1. universe lookup for the date range: point-in-time members
    (P15/P16), ticker→(sym_root, sym_suffix) split (F2), dedup by
    permno with explicit ordering (A2),
-2. restrict quotes to universe symbols: broadcast **left-semi join**
-   replacing the hand-rolled OR-of-ANDs WHERE clause
-   (taq_chunks.py:47-55, SURVEY P9/J4),
-3. midquote (F1), timestamp assembly (F6), market-hours clip (P11),
-4. symbol→permno mapping: broadcast left join with **null-safe**
+2. midquote (F1), timestamp assembly (F6), market-hours clip (P11),
+3. symbol→permno mapping: one broadcast join with **null-safe**
    suffix equality (J3 — replaces the fillna('') hack at
-   taq_chunks.py:79-81),
-5. dedup-average per (timestamp, permno) (A1),
-6. resample + forward-fill per (permno, day) (W1),
-7. re-clip to market hours (P12 — the reference re-applies
+   taq_chunks.py:79-81).  It is inner, so it also restricts the quote
+   scan to universe symbols, replacing the hand-rolled OR-of-ANDs
+   WHERE clause (taq_chunks.py:47-55, SURVEY P9/J4) without a second
+   pass over the lookup,
+4. one shuffle on (permno, date), which the dedup-average per
+   (timestamp, permno) (A1), the bucket-last and the fill window all
+   reuse,
+5. resample + forward-fill per (permno, day) (W1),
+6. re-clip to market hours (P12 — the reference re-applies
    between_time after resampling, taq_chunks.py:106).
 
 Output stays long (bucket, permno, price); ``to_wide`` pivots at the
@@ -70,27 +72,17 @@ def resampled_prices(
     """Long price panel (date, permno, bucket, price) for every
     (day, symbol) in the universe — the whole taq_chunks.py day loop
     as one plan."""
-    lookup = universe_symbols
-    # J4: semi-join restriction of the quote scan to universe symbols
-    suffix_eq = nbbo["sym_suffix"].eqNullSafe(lookup["sym_suffix"])
-    quotes = nbbo.join(
-        F.broadcast(lookup),
-        (nbbo["date"] == lookup["date"])
-        & (nbbo["sym_root"] == lookup["sym_root"])
-        & suffix_eq,
-        "left_semi",
-    )
-
     # F1 midquote; P14 drop null-mid rows (NaN best_ask, notebook cell 12)
     quotes = (
-        quotes.withColumn("price", midquote("best_bid", "best_ask"))
+        nbbo.withColumn("price", midquote("best_bid", "best_ask"))
         .dropna(subset=["price"])
         # P11: market-hours clip pushed before the aggregation
         .filter(in_market_hours("time_m", open_time, close_time))
     )
 
-    # J3: symbol→permno broadcast left join, null-safe suffix key
-    q, l = quotes.alias("q"), F.broadcast(lookup).alias("l")
+    # J3/J4: symbol→permno broadcast join, null-safe suffix key; the
+    # dropna makes it inner, which drops quotes of non-universe symbols
+    q, l = quotes.alias("q"), F.broadcast(universe_symbols).alias("l")
     mapped = q.join(
         l,
         (F.col("q.date") == F.col("l.date"))
@@ -104,9 +96,13 @@ def resampled_prices(
         F.col("q.price").alias("price"),
     ).dropna(subset=["permno"])
 
-    # A1: collapse simultaneous updates per (timestamp, permno)
-    deduped = mapped.groupBy("date", "permno", "time_m").agg(
-        F.avg("price").alias("price")
+    # A1: collapse simultaneous updates per (timestamp, permno).  The
+    # (permno, date) partitioning satisfies this aggregate, the
+    # bucket-last aggregate and the fill window alike: one Exchange.
+    deduped = (
+        mapped.repartition("permno", "date")
+        .groupBy("date", "permno", "time_m")
+        .agg(F.avg("price").alias("price"))
     )
 
     # W1: per-(permno, day) fixed grid + ffill
