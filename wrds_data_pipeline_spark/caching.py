@@ -132,8 +132,12 @@ def waist(
 def materialize_release(df: DataFrame, scope: PersistScope) -> DataFrame:
     """The self-managed ending: eagerly materialize ``df`` at a waist
     (so the result no longer depends on the scope's caches), then
-    release the scope.  Skips the waist when the scope tracked nothing
-    (the plan never read a cache, so laziness costs nothing)."""
+    release the scope.  Skips the waist when the scope tracked nothing:
+    either the plan read no cache, or every cache it read belongs to
+    another owner (``PersistScope.persist`` returns an already-cached
+    plan untracked).  In the second case the result stays lazy on that
+    owner's cache; it is still correct after the owner releases, but
+    then recomputes from lineage."""
     if scope.tracked == 0:
         return df
     out = waist(df, eager=True)

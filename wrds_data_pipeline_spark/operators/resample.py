@@ -17,7 +17,8 @@ relation):
    keys and ordered by bucket, computes ``lead(bucket)`` and the fill
    value — ``last(value, ignorenulls)`` for ffill,
    ``first(value, ignorenulls)`` over the following rows for bfill.
-3. gap: ``explode(sequence(bucket, next - 1µs, freq))`` emits every
+3. gap: ``explode(sequence(bucket, next - 1µs, freq))``, split per
+   civil day so every point lands on a day-anchored slot, emits every
    grid bucket up to the successor, carrying the fill value.  The
    empty buckets are generated next to the value they inherit, so no
    dense grid is ever joined back to the samples.
@@ -122,25 +123,20 @@ def _twap(
     )
 
 
-def _gap_buckets(
-    spans: DataFrame, freq_seconds: int, split_days: bool
-) -> DataFrame:
+def _gap_buckets(spans: DataFrame, freq_seconds: int) -> DataFrame:
     """One row per grid bucket in ``[bucket, _next)`` as ``_g``; the
     last sampled bucket of a partition (``_next`` NULL) yields itself.
 
     The exclusive bound ``_next - 1µs`` needs no ``_next - step``
-    arithmetic, which would be off the grid across a midnight.  With
-    ``split_days`` a gap is enumerated per civil day, each day from its
-    midnight (or ``bucket`` on its first day) to its last
-    :func:`bucketize` slot: one continuous ``sequence(lo, hi, freq)``
-    drifts off the day anchor whenever the frequency does not divide
-    86400 (86400 % 7 = 3), which the midnight-crossing Hypothesis sweep
-    found."""
+    arithmetic, which would be off the grid across a midnight.  A gap
+    is enumerated per civil day, each day from its midnight (or
+    ``bucket`` on its first day) to its last :func:`bucketize` slot:
+    one continuous ``sequence(lo, hi, freq)`` drifts off the day anchor
+    whenever the frequency does not divide 86400 (86400 % 7 = 3), which
+    the midnight-crossing Hypothesis sweep found."""
     step = F.expr(f"INTERVAL {freq_seconds} SECONDS")
     lo = F.col("bucket")
     hi = F.coalesce(F.col("_next") - F.expr("INTERVAL 1 MICROSECOND"), lo)
-    if not split_days:
-        return spans.withColumn("_g", F.explode(F.sequence(lo, hi, step)))
     days = spans.withColumn("_hi", hi).withColumn(
         "_day", F.explode(F.sequence(F.to_date(lo), F.to_date("_hi")))
     )
@@ -171,8 +167,7 @@ def resample_ffill(
     last sampled bucket.  ``day_col`` (if given) bounds grid and fill
     to one day per key — matching the reference's per-day processing
     (taq_chunks.py:111-147) AND keeping window partitions small at
-    scale; it must be the civil day of ``ts_col``, as then no gap
-    crosses a midnight.
+    scale.
 
     One window over the sampled rows computes each bucket's successor
     and its fill value; each sampled bucket then explodes into the gap
@@ -206,6 +201,6 @@ def resample_ffill(
         filled = F.when(
             F.col("_g") == F.col("bucket"), F.coalesce(own, filled)
         ).otherwise(filled)
-    return _gap_buckets(spans, freq_seconds, split_days=day_col is None).select(
+    return _gap_buckets(spans, freq_seconds).select(
         *grid_keys, F.col("_g").alias("bucket"), filled.alias(value_col)
     )
